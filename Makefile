@@ -1,7 +1,8 @@
 # Round-exit gate: run `make check` as the LAST act before recording
 # artifacts — round 3 shipped with its own plan-audit test red because the
-# final full-suite run was skipped. `check` is the full gate; `quickcheck`
-# is the fast inner loop (plan audit + all 132 DuckDB oracles at sf0.01).
+# final full-suite run was skipped. `check` is the full gate (the ROADMAP
+# tier-1 command); `quickcheck` is the fast inner loop (plan audit + the
+# DuckDB oracles at sf0.01).
 #
 # Snapshot discipline (round 8 shipped 2 red tests in its final commit):
 # a round's final commit must contain NO new operator/test logic that
@@ -11,7 +12,8 @@
 .PHONY: check quickcheck bench
 
 check:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 quickcheck:
 	python -m pytest tests/test_plans.py tests/test_queries_oracle.py -q

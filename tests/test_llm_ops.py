@@ -1889,6 +1889,38 @@ def test_minhash_grid_chunking_is_bit_identical(docs):
     assert big == small
 
 
+def test_minhash_shingles_strictly_increasing(docs):
+    """_verified_jaccard's |a∪b| = |a|+|b|−|a∩b| needs distinct-element
+    arrays: every emitted MinHash ``shingles`` array is strictly
+    increasing."""
+    import mare_spark.operators.dedup as D
+
+    rows = docs.select(
+        D._minhash_base_udf(16, 3, 42)(F.col("text")).alias("mh")
+    ).collect()
+    assert any(r["mh"]["shingles"] for r in rows)
+    for r in rows:
+        sh = r["mh"]["shingles"]
+        assert all(a < b for a, b in zip(sh, sh[1:]))
+
+
+def test_minhash_shingles_distinct_under_hash_collision(monkeypatch):
+    """Two grams sharing one 64-bit hash (a forced blake2b-8 collision)
+    still yield a distinct shingle array, and the signature is the one
+    the single hash gives — a minimum ignores duplicates."""
+    import pandas as pd
+
+    import mare_spark.operators.dedup as D
+
+    batch = D._minhash_base_udf(4, 1, 42).func
+    monkeypatch.setattr(D, "_MH_GRAM_CACHE", {"a": 7, "b": 7, "c": 9})
+    collided = batch(pd.Series(["a b c"])).iloc[0]
+    monkeypatch.setattr(D, "_MH_GRAM_CACHE", {"a": 7, "c": 9})
+    single = batch(pd.Series(["a c"])).iloc[0]
+    assert collided["shingles"] == [7, 9]
+    assert collided["sig"] == single["sig"]
+
+
 def test_verified_jaccard_matches_array_union_form(spark):
     """r10: the verify stages compute |a∪b| as |a|+|b|−|a∩b| instead of
     materializing array_union — exact for the DISTINCT-element shingle
